@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Search
 import graft.sources.Tables
+import graft.streaming.IngestJob
 
 /** User-facing entry points — what a user of the reference system would call
   * after switching engines.
@@ -68,7 +69,16 @@ final case class AuditRecord(
   */
 final case class AuditEngine(spark: SparkSession, storeDir: String) {
 
-  def store: DataFrame = spark.read.parquet(storeDir)
+  /** The store as the ingest merge sees it ([[IngestJob.readStore]]):
+    * read under the store's explicit schema, so a search runs no
+    * schema-inference job, and with the merge's `.bak` recovery, so a day
+    * left only under `<store>.bak` by a crashed or stalled swap is read.
+    * A swap that lands while a search runs is NOT covered: the listing
+    * and the later file reads are separate steps, so the search can miss
+    * that day or fail on a moved file. Keep searches and ingest drains
+    * sequential.
+    */
+  def store: DataFrame = IngestJob.readStore(spark, storeDir)
 
   /** Typed view for compile-time-safe pipelines (`Dataset[AuditRecord]`);
     * the untyped [[search]] surface stays primary because the reference's
@@ -76,12 +86,11 @@ final case class AuditEngine(spark: SparkSession, storeDir: String) {
     */
   def typed: org.apache.spark.sql.Dataset[AuditRecord] = {
     import spark.implicits._
-    store.drop("dt").as[AuditRecord]
+    store.as[AuditRecord]
   }
 
   /** `searchAuditData`: dynamic conjunctive equality filters → newest-first
-    * → cap (default 100, `audit.services.ts:161-162`). The `dt` partition
-    * column makes any timestamp-range predicate partition-pruning.
+    * → cap (default 100, `audit.services.ts:161-162`).
     */
   def search(filters: Map[String, Any], limit: Int = 100): DataFrame =
     Search.search(store, filters, "timestamp", "transaction_id", limit)

@@ -41,13 +41,16 @@ import org.apache.spark.sql.types._
   * giving partition pruning on time-ranged queries.
   *
   * Scale shape of a micro-batch (the reference's keyed UPDATE replayed
-  * without an index): the LOCATE scan reads only the `transaction_id`/`dt`
-  * columns of the store with the batch's ≤`maxFilesPerTrigger` keys pushed
-  * down as a parquet IN-filter (row-group stats / bloom skip almost
-  * everything), and the REWRITE touches only the `dt` partitions that
-  * contain those keys — O(affected partitions) written per trigger, not
-  * O(store). At warehouse scale the same batch plan lands on a
-  * Delta/Iceberg MERGE or a store bucketed by `transaction_id`, which
+  * without an index): the LOCATE scan reads the `transaction_id`/`dt`
+  * columns of EVERY store file — the batch's ≤`maxFilesPerTrigger` keys
+  * are random, so row-group min/max stats skip nothing, and Spark pushes
+  * an IN list longer than `spark.sql.parquet.pushdown.inFilterThreshold`
+  * (10) only as a min/max range. The REWRITE then touches only the `dt`
+  * partitions that contain those keys, as exactly one file per partition
+  * — O(affected partitions) written per trigger, not O(store), and a
+  * store of D days stays D files until a day outgrows
+  * [[MaxRecordsPerFile]]. At warehouse scale the same batch plan lands on
+  * a Delta/Iceberg MERGE or a store bucketed by `transaction_id`, which
   * turns the locate scan into a bucket lookup.
   */
 object IngestJob {
@@ -89,6 +92,12 @@ object IngestJob {
 
   private val storeSchemaWithDt =
     StructType(storeSchema.fields :+ StructField("dt", StringType))
+
+  /** Row cap per written store file, shared by the merge rewrite and
+    * [[compactStore]]: a `dt` partition lands as one file until it holds
+    * more rows than this.
+    */
+  private val MaxRecordsPerFile = 1000000L
 
   /** Partition value for rows whose request (and thus timestamp) has not
     * arrived yet — an explicit sentinel instead of a null partition so the
@@ -198,22 +207,25 @@ object IngestJob {
   def readStore(spark: SparkSession, storeDir: String): DataFrame =
     readStoreWithDt(spark, storeDir).drop("dt")
 
+  /** The store with its `dt` column, always under the explicit
+    * [[storeSchemaWithDt]], so no read runs a footer schema-inference job.
+    * The primary is ONE read of the root — one listing, partition
+    * discovery typed by the schema. Days present only under `.bak` are
+    * read per-partition from there and unioned in.
+    */
   private def readStoreWithDt(spark: SparkSession, storeDir: String): DataFrame = {
     val fs = fileSystem(spark, storeDir)
+    val bakDir = storeDir + ".bak"
     val primary = listParts(fs, storeDir)
-    val fromBak = listParts(fs, storeDir + ".bak") -- primary
-    def readParts(base: String, parts: Set[String]): Option[DataFrame] =
-      if (parts.isEmpty) None
-      else Some(spark.read.option("basePath", base).schema(storeSchemaWithDt)
-        .parquet(parts.map(p => s"$base/dt=$p").toSeq: _*))
-    (readParts(storeDir, primary), readParts(storeDir + ".bak", fromBak)) match {
-      case (Some(a), Some(b)) => a.unionByName(b)
-      case (Some(a), None) => a
-      case (None, Some(b)) => b
-      case (None, None) =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], storeSchemaWithDt)
-    }
+    val fromBak = listParts(fs, bakDir) -- primary
+    def reader = spark.read.schema(storeSchemaWithDt)
+    val live = if (primary.isEmpty) None else Some(reader.parquet(storeDir))
+    val bak = if (fromBak.isEmpty) None
+      else Some(reader.option("basePath", bakDir)
+        .parquet(fromBak.map(p => s"$bakDir/dt=$p").toSeq: _*))
+    (live ++ bak).reduceOption(_ unionByName _).getOrElse(
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], storeSchemaWithDt))
   }
 
   /** Promote freshly-written partition directories from `<store>.tmp` into
@@ -276,9 +288,13 @@ object IngestJob {
     *     aggregation on the key.
     *  3. REWRITE — affected partitions = old locations of the keys ∪ new
     *     `dt`s of the merged rows; untouched keys of those partitions are
-    *     carried over, everything lands in `<store>.tmp`, and
-    *     [[swapPartitions]] promotes. Partitions without a batch key are
-    *     never read beyond the locate scan, never written.
+    *     carried over, everything is repartitioned by `dt` so each
+    *     partition lands in `<store>.tmp` as ONE file (up to
+    *     [[MaxRecordsPerFile]] rows), and [[swapPartitions]] promotes.
+    *     Partitions without a batch key are never read beyond the locate
+    *     scan, never written. Without the exchange every rewrite would
+    *     write one file per input split per `dt`, and every later search
+    *     and locate scan would pay for each of them.
     */
   def processBatch(spark: SparkSession, batch: DataFrame, storeDir: String): Unit = {
     val records = toRecords(batch)
@@ -303,7 +319,10 @@ object IngestJob {
         .filter(col("dt").isInCollection(parts) &&
           !col("transaction_id").isInCollection(keys))
       survivors.unionByName(merged)
-        .write.mode("overwrite").partitionBy("dt").parquet(storeDir + ".tmp")
+        .repartition(col("dt"))
+        .write.mode("overwrite")
+        .option("maxRecordsPerFile", MaxRecordsPerFile.toString)
+        .partitionBy("dt").parquet(storeDir + ".tmp")
       swapPartitions(fileSystem(spark, storeDir), storeDir, parts)
     } finally {
       hit.unpersist()
@@ -311,17 +330,18 @@ object IngestJob {
     }
   }
 
-  /** Compact the store's partitions: every long-running micro-batch sink
-    * accumulates small files (each trigger writes at least one per touched
-    * partition); scans then pay per-file open/footer costs. Rewrites each
-    * partition's rows into ≤`maxRecordsPerFile`-row files through the same
-    * crash-safe [[swapPartitions]] protocol the merge uses — safe to run
-    * between triggers, and a crash mid-compaction loses nothing. Only
-    * partitions with more than `minFiles` data files are touched.
+  /** Compact the store's partitions into ≤`maxRecordsPerFile`-row files
+    * through the same crash-safe [[swapPartitions]] protocol the merge
+    * uses — safe to run between triggers, and a crash mid-compaction loses
+    * nothing. Only partitions with more than `minFiles` data files are
+    * touched. [[processBatch]] already rewrites each touched partition as
+    * one file, so this is for stores whose partitions gathered files some
+    * other way: written by an older layout, or by appends from outside
+    * the merge.
     */
   def compactStore(
       spark: SparkSession, storeDir: String,
-      minFiles: Int = 4, maxRecordsPerFile: Long = 1000000L): Seq[String] = {
+      minFiles: Int = 4, maxRecordsPerFile: Long = MaxRecordsPerFile): Seq[String] = {
     val fs = fileSystem(spark, storeDir)
     val parts = listParts(fs, storeDir).toSeq.filter { p =>
       fs.listStatus(new Path(s"$storeDir/dt=$p"))

@@ -50,11 +50,13 @@ private[streaming] object IngestStages {
     * cancelJobGroup would then interrupt B's in-flight writes (and B's
     * own stop couldn't find its jobs). Explicitly setting the caller's
     * values (null clears a stale inherited one) on the worker per task
-    * removes the whole class.
+    * removes the whole class. The streaming query and batch ids ride
+    * along for the same reason: without them a stage job cannot be
+    * attributed to its trigger, or is attributed to a stale one.
     */
   private val carriedProps =
     Seq("spark.jobGroup.id", "spark.job.interruptOnCancel",
-      "spark.scheduler.pool")
+      "spark.scheduler.pool", "streaming.sql.batchId", "sql.streaming.queryId")
 
   /** Run `f`'s Spark jobs under a stage label on the current thread,
     * restoring the PREVIOUS description after (a null-out would wipe the

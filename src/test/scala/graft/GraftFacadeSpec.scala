@@ -57,6 +57,31 @@ class GraftFacadeSpec extends SparkTestBase {
     assert(row.getAs[String]("response_data") === null) // null-guarded, like the reference
   }
 
+  test("AuditEngine reads a day caught mid-swap from <store>.bak") {
+    val store = Files.createTempDirectory("graft-facade-bak").resolve("audit").toString
+    val batch = Seq(
+      ("t1", "app-a", "/u", "wf", "create", null.asInstanceOf[Integer],
+        "2026-01-01T10:00:00Z", "k/t1/request.json"),
+      ("t2", "app-a", "/u", "wf", "create", null.asInstanceOf[Integer],
+        "2026-01-02T10:00:00Z", "k/t2/request.json"))
+      .toDF("transactionId", "appId", "endpoint", "workflowId", "action",
+        "statusCode", "timestamp", "srcKey")
+    IngestJob.processBatch(spark, batch, store)
+    // the swap's rotate-before-promote window: the day's only copy sits
+    // under <store>.bak, its primary directory is gone
+    val fs = new org.apache.hadoop.fs.Path(store)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(store + ".bak"))
+    assert(fs.rename(
+      new org.apache.hadoop.fs.Path(s"$store/dt=2026-01-02"),
+      new org.apache.hadoop.fs.Path(s"$store.bak/dt=2026-01-02")))
+
+    val engine = AuditEngine(spark, store)
+    assert(engine.search(Map.empty).collect().map(_.getAs[String]("transaction_id"))
+      .toSeq === Seq("t2", "t1"), "search missed the day being swapped")
+    assert(engine.searchCount(Map.empty) === 2)
+  }
+
   test("blob cache: per-key payload hits skip the store; misses fetch once and warm it") {
     val store = Files.createTempDirectory("graft-blob").resolve("audit").toString
     val batch = Seq(

@@ -229,14 +229,24 @@ class IngestJobSpec extends SparkTestBase {
         .json(spark.createDataset(Seq(json))(org.apache.spark.sql.Encoders.STRING))
         .withColumn("srcKey", lit(name))
     val store = tmpDir("graft-compact").resolve("audit").toString
-    // 6 batches into the same dt partition → one file per writer task per
-    // rewrite (the partition-scoped merge itself bounds fragmentation at
-    // the task count); one lone batch into another dt stays single-file
+    // 6 batches into the same dt partition, one lone batch into another;
+    // the merge rewrites each touched dt as one file
     for (i <- 1 to 6)
       IngestJob.processBatch(spark,
         batchOf(request(s"txn-$i", "2025-01-26T10:00:00Z"), s"r$i-request.json"), store)
     IngestJob.processBatch(spark,
       batchOf(request("txn-other", "2025-01-27T09:00:00Z"), "o-request.json"), store)
+    // so fragment dt=2025-01-26 explicitly: two more store-schema files
+    // appended into its directory, as an older per-task layout or an
+    // append from outside the merge would leave them
+    for (i <- 1 to 2) {
+      val row = org.apache.spark.sql.Row(s"txn-x$i", "test-app", "/api/users",
+        "registration", "create", 200,
+        java.sql.Timestamp.from(java.time.Instant.parse(s"2025-01-26T11:0$i:00Z")),
+        s"x$i-request.json", s"x$i-response.json")
+      spark.createDataFrame(java.util.List.of(row), IngestJob.storeSchema)
+        .write.mode("append").parquet(s"$store/dt=2025-01-26")
+    }
 
     def nFiles(dt: String): Int = new java.io.File(s"$store/dt=$dt")
       .listFiles().count(f => f.getName.endsWith(".parquet"))
@@ -248,6 +258,75 @@ class IngestJobSpec extends SparkTestBase {
     assert(nFiles("2025-01-26") === 1)
     assert(spark.read.parquet(store).collect().map(_.toString).sorted === before,
       "compaction must be a pure layout change")
+  }
+
+  /** One batch of envelopes, each JSON tagged with its file name, spread
+    * over several input partitions like a multi-file trigger.
+    */
+  private def envelopes(named: Seq[(String, String)]) = {
+    val tagged = named.map { case (json, name) =>
+      json.stripSuffix("}") + s""","srcKey":"$name"}""" }
+    spark.read.schema(IngestJob.rawSchema.add("srcKey", "string"))
+      .json(spark.createDataset(tagged)(org.apache.spark.sql.Encoders.STRING).repartition(3))
+  }
+
+  private def dataFiles(store: String, dt: String): Int =
+    new java.io.File(s"$store/dt=$dt").listFiles().count(_.getName.endsWith(".parquet"))
+
+  test("the merge rewrites each touched dt partition as exactly one file") {
+    val store = tmpDir("graft-layout").resolve("audit").toString
+    val days = Seq("2025-01-21", "2025-01-22", "2025-01-23")
+    def requests(ids: Range) = for (d <- days; i <- ids)
+      yield request(s"txn-$d-$i", s"${d}T10:0$i:00Z") -> s"$d-$i-request.json"
+    IngestJob.processBatch(spark,
+      envelopes(requests(1 to 4) :+ (response("txn-early", 503) -> "early-response.json")),
+      store)
+    // the second batch adds keys to every day that already holds rows,
+    // completes one of them, and lands a second pending response
+    IngestJob.processBatch(spark, envelopes(requests(5 to 8) ++ Seq(
+      response("txn-2025-01-21-1", 200) -> "r1-response.json",
+      response("txn-late", 500) -> "late-response.json")), store)
+    for (dt <- days :+ IngestJob.PendingDt)
+      assert(dataFiles(store, dt) === 1, s"dt=$dt holds more than one file")
+    val rows = IngestJob.readStore(spark, store)
+    assert(rows.count() === 26)
+    assert(rows.where("transaction_id = 'txn-2025-01-21-1'").head()
+      .getAs[Integer]("status_code") === 200)
+  }
+
+  test("readStore: the root read and the .bak recovery read return the same rows") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val store = tmpDir("graft-readstore").resolve("audit").toString
+    IngestJob.processBatch(spark, envelopes(Seq(
+      request("txn-a", "2025-01-21T10:00:00Z") -> "a-request.json",
+      request("txn-b", "2025-01-22T10:00:00Z") -> "b-request.json",
+      response("txn-b", 200) -> "b-response.json",
+      response("txn-early", 503) -> "early-response.json")), store)
+    // the rows, and the paths the read lists
+    def rows() = {
+      val df = IngestJob.readStore(spark, store)
+      (df.collect().map(_.toString).sorted.toSeq,
+        df.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }
+          .flatMap { case h: HadoopFsRelation => h.location.rootPaths.map(_.toString) })
+    }
+    val (fast, fastRoots) = rows()
+    assert(fast.size === 3)
+    assert(fast.exists(_.startsWith("[txn-early,")), "pending row missing")
+    assert(fastRoots.size === 1 && fastRoots.head.endsWith("/audit"),
+      s"no partition is bak-only: the store must be one root read, got $fastRoots")
+
+    // crash window of a swap: two partitions, pending among them, live
+    // only under <store>.bak
+    val fs = new org.apache.hadoop.fs.Path(store)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(store + ".bak"))
+    for (dt <- Seq("2025-01-22", IngestJob.PendingDt))
+      assert(fs.rename(new org.apache.hadoop.fs.Path(s"$store/dt=$dt"),
+        new org.apache.hadoop.fs.Path(s"$store.bak/dt=$dt")))
+    val (recovered, recoveredRoots) = rows()
+    assert(recoveredRoots.count(_.contains("/audit.bak/")) === 2,
+      s"bak-only partitions must be read from <store>.bak: $recoveredRoots")
+    assert(recovered === fast)
   }
 
   test("batch replay is idempotent (exactly-once per epoch)") {

@@ -5,8 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The concurrent-stage plumbing's own contracts — each pinned here
   * because its failure mode is silent cross-query interference, not a
   * wrong result: (1) pooled stage threads must carry the CALLER's job
-  * group (InheritableThreadLocal snapshots at thread creation would leak
-  * query A's group onto query B's writes, so A.stop() cancels B); (2) a
+  * group and streaming batch/query ids (InheritableThreadLocal snapshots
+  * at thread creation would leak query A's group onto query B's writes,
+  * so A.stop() cancels B, and leave stage jobs with no or a stale batch
+  * id); (2) a
   * stage must restore the previous job description (a null-out wipes the
   * enclosing stage's / streaming engine's label for the rest of the
   * thread); (3) a multi-failure trigger must surface every cause.
@@ -33,6 +35,32 @@ class IngestStagesSpec extends AnyFunSuite {
     }
     assert(seenB === null,
       s"pool thread leaked a stale job group to a group-less caller: $seenB")
+  }
+
+  test("pooled stage jobs carry the caller's streaming batch and query ids; a later id-less caller runs clean") {
+    val sc = spark.sparkContext
+    val ids = Seq("streaming.sql.batchId", "sql.streaming.queryId")
+    // what a job launched inside a stage sees, read from its task
+    def jobSees(): Seq[String] =
+      sc.parallelize(Seq(0), 1).map { _ =>
+        val tc = org.apache.spark.TaskContext.get()
+        ids.map(tc.getLocalProperty)
+      }.collect().head
+
+    sc.setLocalProperty("streaming.sql.batchId", "7")
+    sc.setLocalProperty("sql.streaming.queryId", "query-A")
+    @volatile var seenA: Seq[String] = Nil
+    try IngestStages.inParallel(spark, "probe" -> (() => { seenA = jobSees() }))
+    finally ids.foreach(sc.setLocalProperty(_, null))
+    assert(seenA === Seq("7", "query-A"), "stage job lost its trigger's ids")
+
+    // caller B has no ids: the warm pool threads must not keep A's
+    @volatile var seenB: Seq[String] = Nil
+    (0 until 4).foreach { _ =>
+      IngestStages.inParallel(spark, "probe" -> (() => { seenB = jobSees() }))
+    }
+    assert(seenB === Seq(null, null),
+      s"pool thread leaked a stale batch or query id to an id-less caller: $seenB")
   }
 
   test("stage() restores the enclosing description — nested stages keep the outer label") {
