@@ -19,10 +19,22 @@ import graft.streaming.IngestJob
   */
 object Graft {
 
-  /** Session tuned for this engine's workloads. `shufflePartitions` should
+  /** Session tuned for this engine's workloads — the one session builder
+    * of every main, tool and the test base. `shufflePartitions` should
     * track the executor-core budget (the driver harness uses 32); AQE then
     * coalesces/re-splits at runtime — skew joins and small partitions are
     * handled without manual tuning.
+    *
+    * File listing stays on the driver (`parallelPartitionDiscovery
+    * .threshold` = `Int.MaxValue`). Above the default threshold of 32
+    * paths, at any directory level, Spark lists through a job with one
+    * task per path; under a `local[N]` master those tasks run on the
+    * driver's own threads, so the job only adds scheduling. Two reads hit
+    * it on every audit drain: the file source resolving a trigger's ≤100
+    * envelope files, and, on a restarted query, the re-plan of the last
+    * committed batch — two 100-task jobs per drain. And an audit store
+    * older than 32 days (one `dt` directory per day) would pay a listing
+    * job on every search and every merge's locate scan.
     */
   def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
     val s = SparkSession.builder()
@@ -33,6 +45,9 @@ object Graft {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+        Int.MaxValue.toString)
+      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

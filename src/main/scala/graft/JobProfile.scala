@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Dev utility: per-JOB wall-time breakdown of the stored-index probe
@@ -16,12 +15,7 @@ object JobProfile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val entry = if (args.length > 1) args(1) else "simjoin_probe_small"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Graft.session(s"local[$cpus]", 32)
     spark.sparkContext.setLogLevel("ERROR")
 
     val idxRoot = "target/bench_idx"

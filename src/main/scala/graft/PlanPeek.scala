@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility: print the final (post-AQE) physical plan of declared
   * queries — `runMain graft.PlanPeek q_a q_b ...`. The same rendering the
@@ -8,12 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanPeek {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Graft.session("local[4]", 4)
     spark.sparkContext.setLogLevel("ERROR")
     for (q <- args) {
       val df = SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")

@@ -82,9 +82,9 @@ object Tables {
       * `TimestampType` at µs precision.
       *
       *  - int64 nanos (read as `LongType` under
-      *    `spark.sql.legacy.parquet.nanosAsLong=true`, set at session
-      *    construction by `Graft.session`, `Verify`, `Bench`, and the test
-      *    base): truncate to µs with exact integer division (`DIV`, no
+      *    `spark.sql.legacy.parquet.nanosAsLong=true`, set by
+      *    `Graft.session`, the one builder of every session the repo
+      *    makes): truncate to µs with exact integer division (`DIV`, no
       *    double round-trip) — bit-identical to DuckDB's own ns→µs
       *    truncation of the same file.
       *  - `TIMESTAMP_NTZ` (µs, no zone): cast to `TimestampType`. The

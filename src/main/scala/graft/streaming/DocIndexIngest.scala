@@ -365,8 +365,11 @@ object DocIndexIngest {
         bm25PostingsDir(root), bm25StatsDir(root), posPostingsDir(root),
         GraphIngest.degreesDir(root), GraphIngest.remapDir(root))
       .foreach(StoreCompaction.heal(spark, _))
-    currentEpoch(spark, root)
-      .foreach(e => StoreCompaction.heal(spark, prefixDir(root, e)))
+    // resolved once for the heal and the bootstrap decisions below (each
+    // resolve lists simidx/ and probes a _DONE marker per epoch); only the
+    // post-bootstrap epoch is resolved again
+    val preEpoch = currentEpoch(spark, root)
+    preEpoch.foreach(e => StoreCompaction.heal(spark, prefixDir(root, e)))
     writeOrCheckConfig(spark, root, cfg)
     // one materialization: the batch feeds the probe, three index
     // appends, and the corpus append. Gated: CurateIngest hands in its
@@ -374,7 +377,7 @@ object DocIndexIngest {
     val b = IngestStages.materialize(batch)
 
     // ── bootstrap: freeze the epoch-0 dictionary from the first batch ──
-    if (currentEpoch(spark, root).isEmpty) {
+    if (preEpoch.isEmpty) {
       if (b.isEmpty) {
         // nothing to index AND nothing to freeze the dictionary from: an
         // empty epoch-0 dictionary would rank every shingle at df=0 for
@@ -400,7 +403,7 @@ object DocIndexIngest {
       ()
     }
     val bootstrapStage: Option[(String, () => Unit)] =
-      if (currentEpoch(spark, root).isEmpty)
+      if (preEpoch.isEmpty)
         // deterministic content (md5-derived) ⇒ a replayed bootstrap
         // rewrites identical bytes; plain overwrite is idempotent here
         Some("docidx:df_bootstrap" -> (() => {

@@ -1,7 +1,7 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Dev utility: write `.explain("formatted")` output (plus the post-AQE
   * executed plan) for declared queries to `plans/<dir>/<query>_<tag>.txt`
@@ -21,21 +21,14 @@ object PlanDump {
     val (dir, tag, queries) = (args(0), args(1), args.drop(2).toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Graft.session(s"local[$cpus]", cpus.toInt)
     // extra session conf, `k=v;k=v` — e.g. autoBroadcastJoinThreshold=-1
     // to dump the plan shape a cluster-scale (non-broadcastable) input
     // would take; dev tool only, never touches Bench's session
     sys.env.get("SPARK_GRAFT_PLANDUMP_CONF").foreach(_.split(";").foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
-      builder.config(s"spark.sql.$k", v); ()
+      spark.conf.set(s"spark.sql.$k", v)
     })
-    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(s"plans/$dir"))
     def frame(name: String): DataFrame = name match {

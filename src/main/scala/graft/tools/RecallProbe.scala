@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import graft.NsQueries.{AnnBudget => AnnB}
@@ -25,14 +24,7 @@ import graft.sources.Tables.Fixture
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session("local[16]", 16)
     spark.sparkContext.setLogLevel("ERROR")
     // SPARK_GRAFT_REP=R inflates the fixture with R−1 id-shifted replicas
     // (ScaleBench's exact replica semantics: vectors unchanged, ids

@@ -82,6 +82,33 @@ class GraftFacadeSpec extends SparkTestBase {
     assert(engine.searchCount(Map.empty) === 2)
   }
 
+  test("a search over a store older than a month runs one job and returns the newest 100 rows") {
+    val store = Files.createTempDirectory("graft-facade-40d").resolve("audit").toString
+    // 40 days, 5 requests a day, one same-instant pair a day: the tie
+    // falls to transaction_id
+    val start = java.time.LocalDate.parse("2026-01-01")
+    val batch = (for (d <- 0 until 40; i <- 0 until 5) yield {
+      val hour = 10 + math.min(i, 3)
+      (f"t$d%02d-$i", "app-a", "/u", "wf", "create", null.asInstanceOf[Integer],
+        f"${start.plusDays(d.toLong)}T$hour%02d:00:00Z", f"k/t$d%02d-$i/request.json")
+    }).toDF("transactionId", "appId", "endpoint", "workflowId", "action",
+      "statusCode", "timestamp", "srcKey")
+    IngestJob.processBatch(spark, batch, store)
+    val want = IngestJob.readStore(spark, store).collect().toSeq
+      .sortBy(r => (-r.getAs[java.sql.Timestamp]("timestamp").getTime,
+        r.getAs[String]("transaction_id")))(
+        Ordering.Tuple2(Ordering.Long, Ordering.String.reverse))
+      .take(100)
+    assert(want.map(_.getAs[java.sql.Timestamp]("timestamp").getTime / 86400000L)
+      .distinct.size === 20)
+
+    val engine = AuditEngine(spark, store)
+    var got: Seq[org.apache.spark.sql.Row] = Nil
+    val jobs = jobsDuring { got = engine.search(Map.empty).collect().toSeq }
+    assert(jobs.size === 1, s"a 40-day search must run one job: $jobs")
+    assert(got === want)
+  }
+
   test("blob cache: per-key payload hits skip the store; misses fetch once and warm it") {
     val store = Files.createTempDirectory("graft-blob").resolve("audit").toString
     val batch = Seq(

@@ -329,6 +329,27 @@ class IngestJobSpec extends SparkTestBase {
     assert(recovered === fast)
   }
 
+  test("a restarted drain runs no file-listing job: every job carries its batch id") {
+    val in = tmpDir("graft-in-listing")
+    val store = tmpDir("graft-store-listing").resolve("audit").toString
+    val cp = tmpDir("graft-cp-listing").toString
+    // 40 files per trigger: above the 32 paths at which Spark's default
+    // lists a read's paths through a job
+    def land(from: Int): Unit = (from until from + 40).foreach { i =>
+      writeJson(in, f"t$i%03d-request.json", request(f"t$i%03d", "2025-01-26T10:00:00Z"))
+    }
+    land(0)
+    IngestJob.run(spark, in.toString, store, cp).awaitTermination()
+    land(40)
+    // the second run restarts over the committed first batch
+    val jobs = jobsDuring(IngestJob.run(spark, in.toString, store, cp).awaitTermination())
+    assert(jobs.nonEmpty)
+    assert(!jobs.exists(_.description.startsWith("Listing leaf files")),
+      s"the drain ran a file-listing job: $jobs")
+    assert(jobs.forall(_.batchId.isDefined), s"a drain job carries no batch id: $jobs")
+    assert(IngestJob.readStore(spark, store).count() === 80)
+  }
+
   test("batch replay is idempotent (exactly-once per epoch)") {
     val in = tmpDir("graft-in2")
     val store = tmpDir("graft-store2").resolve("audit").toString
