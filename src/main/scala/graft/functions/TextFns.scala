@@ -58,9 +58,9 @@ object TextFns {
     conv(substring(md5(s), 1, 15), 16, 10).cast("long")
 
   /** JVM-side twin of [[h60]] — bit-identical (same md5-hex prefix parse),
-    * for per-group streaming state code that ranks by the SAME hash the
-    * batch operators use (e.g. [[graft.streaming.StreamQuantile]]'s
-    * bottom-k state ≡ the batch [[graft.operators.Aggregates.kmhSample]]).
+    * for driver-side code that must hash the SAME way the plan does (e.g.
+    * [[graft.operators.TextSearch]]'s query terms probing the stored
+    * term-hash classes).
     */
   def h60Local(s: String): Long = {
     val hex = java.security.MessageDigest.getInstance("MD5")

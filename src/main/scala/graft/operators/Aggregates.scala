@@ -195,21 +195,19 @@ object Aggregates {
     * key cardinality, where an exact per-token count is a corpus-wide
     * shuffle.
     *
-    * The eps default is a JOINT contract with
-    * [[graft.streaming.StreamHeavyHitters.heavyHitters]] — blobs built
-    * under differing (eps, confidence, seed) throw
-    * `IncompatibleMergeException` at merge time, so the two defaults must
-    * move together. Default 1e-3 ⇒ ~110 KB/blob (1e-4 was 10× that for a
-    * 10× tighter bound few callers need; rounds ≤ 13 shipped 1e-4 —
-    * blobs persisted under the old default only merge with new blobs
-    * built with an explicit `eps = 0.0001`).
+    * Blobs built under differing (eps, confidence, seed) throw
+    * `IncompatibleMergeException` at merge time, so every sketch that is
+    * to be merged must use the same three values. Default 1e-3 ⇒
+    * ~110 KB/blob (1e-4 was 10× that for a 10× tighter bound few callers
+    * need; rounds ≤ 13 shipped 1e-4 — blobs persisted under the old
+    * default only merge with new blobs built with an explicit
+    * `eps = 0.0001`).
     */
   def cmsSketches(df: DataFrame, key: String, v: String,
                   eps: Double = 0.001, confidence: Double = 0.99): DataFrame =
     df.groupBy(col(key))
-      // Column-API form of the same expression (caller names never enter
-      // the parser); blob bytes are unchanged — the bit-identity spec vs
-      // StreamHeavyHitters pins it
+      // Column-API form of the same expression: caller names never enter
+      // the parser
       .agg(count_min_sketch(col(v), lit(eps), lit(confidence), lit(42)).as("sketch"))
 
   /** Driver-side merge + probe of [[cmsSketches]] blobs via Spark's public

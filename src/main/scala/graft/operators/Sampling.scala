@@ -77,8 +77,7 @@ object Sampling {
     // widens to DECIMAL(38,0): w·2^20 wraps BIGINT past w ≈ 2^43 with
     // ANSI off — the silent-wrap class the collocations lift fix closed.
     // Weights past the 2^43 bound RAISE instead of wrapping at the final
-    // BIGINT cast — the streaming twin rejects them the same way, so the
-    // two forms can never silently diverge at extreme weights.
+    // BIGINT cast.
     val maxW = Long.MaxValue >> 20
     df.withColumn("__w", col(weightCol).cast("long"))
       .filter(col("__w") > 0L)

@@ -695,8 +695,8 @@ object Similarity {
       // A sample smaller than ksub trains a smaller codebook (codes stay
       // valid — fewer cells, coarser quantization). Loud, not silent.
       if (seeds.length < ksub)
-        System.err.println(
-          s"graft.Similarity.pqCodebooks: sample has only ${seeds.length} rows " +
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"pqCodebooks: sample has only ${seeds.length} rows " +
             s"< ksub=$ksub; training a ${seeds.length}-cell codebook per subspace")
       Array.tabulate(m)(j => seeds.map(_.slice(j * dsub, (j + 1) * dsub)))
     }

@@ -44,8 +44,7 @@ object Windows {
   /** Batch sessionization (gaps-and-islands): a new session starts when the
     * gap to the previous event exceeds `gapSeconds`. Two window passes over
     * ONE (key, ts) sort — lag for the gap flag, running sum for the session
-    * id — then a hash aggregation per session. The streaming twin (state
-    * store instead of sort) is `streaming/StreamWindows.sessionize`.
+    * id — then a hash aggregation per session.
     */
   def sessionAgg(df: DataFrame, key: String, ts: String, tiebreak: String,
                  gapSeconds: Long): DataFrame = {

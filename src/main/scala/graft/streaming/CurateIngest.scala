@@ -492,45 +492,27 @@ object CurateIngest {
           trigger: org.apache.spark.sql.streaming.Trigger =
             org.apache.spark.sql.streaming.Trigger.AvailableNow(),
           compactEvery: Option[Int] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    compactEvery.foreach(n =>
-      require(n > 0, s"compactEvery must be positive, got $n"))
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        // cadence folds BOTH store groups this loop maintains (the doc
-        // index/graph stores written via DocIndexIngest.processBatch,
-        // and the fp/meta curation stores) PLUS the curated outDir —
-        // its semantic batch_id survives folding as the src_batch stamp
-        // ([[ProductStore]]), so the product's partition count stays
-        // bounded too. A refused product fold (pre-stamp/mixed-schema
-        // epochs) warns and skips rather than killing the stream.
-        StoreCompaction.cadence(epochId, compactEvery) { upTo =>
-          val idxCfg = DocIndexIngest.Config(cfg.minhashK, cfg.minhashBands,
-            cfg.minJaccPct, cfg.maxBucket, partitionMod)
-          DocIndexIngest.compactStores(spark, root, upTo, idxCfg,
-            fromExclusive = -1L)
-          compactStores(spark, root, upTo, fromExclusive = -1L)
-          outDir.foreach { d =>
-            try ProductStore.compactProduct(spark, d, upTo, fromExclusive = -1L)
-            catch { case e: IllegalArgumentException =>
-              System.err.println(s"[curate] product fold skipped: ${e.getMessage}")
-            }
-          }
-        }
-        val view = processBatch(spark, batch, root, textCol, idCol,
-          epochId, cfg, partitionMod)
-        // provenance-stamped, write-bracketed product write
-        // ([[ProductStore]]) — external readers get torn-free snapshots
-        // and the product stays foldable without losing its semantic
-        // batch_id
-        outDir.foreach(d => ProductStore.writeEpoch(spark, view, d, epochId))
-        ()
-      }
-      .start()
+    // the cadence folds BOTH store groups this loop maintains (the doc
+    // index/graph stores written via DocIndexIngest.processBatch, and the
+    // fp/meta curation stores) PLUS the curated outDir — its semantic
+    // batch_id survives folding as the src_batch stamp ([[ProductStore]]),
+    // so the product's partition count stays bounded too
+    val idxCfg = DocIndexIngest.Config(cfg.minhashK, cfg.minhashBands,
+      cfg.minJaccPct, cfg.maxBucket, partitionMod)
+    def fold(upTo: Long): Unit = {
+      DocIndexIngest.compactStores(spark, root, upTo, idxCfg, fromExclusive = -1L)
+      compactStores(spark, root, upTo, fromExclusive = -1L)
+      outDir.foreach(ProductStore.compactOrSkip(spark, _, upTo))
+    }
+    IngestStages.loop(IngestStages.source(spark, schema, maxFilesPerTrigger, inDir),
+        checkpointDir, trigger, compactEvery, fold) { (batch, epochId) =>
+      val view = processBatch(spark, batch, root, textCol, idCol,
+        epochId, cfg, partitionMod)
+      // provenance-stamped, write-bracketed product write
+      // ([[ProductStore]]) — external readers get torn-free snapshots
+      // and the product stays foldable without losing its semantic
+      // batch_id
+      outDir.foreach(d => ProductStore.writeEpoch(spark, view, d, epochId))
+    }
   }
 }

@@ -582,8 +582,8 @@ object DocIndexIngest {
 
   /** Start the streaming ingest over a directory of document parquet
     * files: new files are the batch stream ([[IngestJob.run]]'s discovery
-    * model), `foreachBatch` runs [[processBatch]], checkpointing gives
-    * exactly-once per epoch on top of the batch-keyed overwrites.
+    * model), [[IngestStages.loop]] runs [[processBatch]], checkpointing
+    * gives exactly-once per epoch on top of the batch-keyed overwrites.
     */
   def run(
       spark: SparkSession, inDir: String, root: String,
@@ -593,22 +593,10 @@ object DocIndexIngest {
       cfg: Config = Config(),
       maxFilesPerTrigger: Int = 100,
       trigger: Trigger = Trigger.AvailableNow(),
-      compactEvery: Option[Int] = None): StreamingQuery = {
-    compactEvery.foreach(n =>
-      require(n > 0, s"compactEvery must be positive, got $n"))
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        StoreCompaction.cadence(epochId, compactEvery)(upTo =>
-          compactStores(spark, root, upTo, cfg, fromExclusive = -1L))
-        processBatch(spark, batch, root, textCol, idCol, epochId, cfg)
-        ()
-      }
-      .start()
-  }
+      compactEvery: Option[Int] = None): StreamingQuery =
+    IngestStages.loop(IngestStages.source(spark, schema, maxFilesPerTrigger, inDir),
+        checkpointDir, trigger, compactEvery,
+        upTo => compactStores(spark, root, upTo, cfg, fromExclusive = -1L)) { (batch, epochId) =>
+      processBatch(spark, batch, root, textCol, idCol, epochId, cfg)
+    }
 }

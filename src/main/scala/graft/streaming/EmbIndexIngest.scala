@@ -718,7 +718,7 @@ object EmbIndexIngest {
   }
 
   /** Start the streaming ingest over a directory of embedding parquet
-    * files — new files are the batch stream, `foreachBatch` runs
+    * files — new files are the batch stream, [[IngestStages.loop]] runs
     * [[processBatch]] (or [[processBatchDedup]] when `dedupMinCosine` is
     * set), checkpointing gives exactly-once per epoch on top of the
     * batch-keyed overwrites (the [[DocIndexIngest.run]] model).
@@ -732,27 +732,15 @@ object EmbIndexIngest {
       maxFilesPerTrigger: Int = 100,
       trigger: Trigger = Trigger.AvailableNow(),
       dedupMinCosine: Option[Double] = None,
-      compactEvery: Option[Int] = None): StreamingQuery = {
-    compactEvery.foreach(n =>
-      require(n > 0, s"compactEvery must be positive, got $n"))
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        StoreCompaction.cadence(epochId, compactEvery)(upTo =>
-          compactStore(spark, root, upTo, fromExclusive = -1L))
-        dedupMinCosine match {
-          case Some(t) =>
-            processBatchDedup(spark, batch, root, idCol, vecCol, epochId, t, cfg)
-          case None =>
-            processBatch(spark, batch, root, idCol, vecCol, epochId, cfg)
-        }
-        ()
+      compactEvery: Option[Int] = None): StreamingQuery =
+    IngestStages.loop(IngestStages.source(spark, schema, maxFilesPerTrigger, inDir),
+        checkpointDir, trigger, compactEvery,
+        upTo => compactStore(spark, root, upTo, fromExclusive = -1L)) { (batch, epochId) =>
+      dedupMinCosine match {
+        case Some(t) =>
+          processBatchDedup(spark, batch, root, idCol, vecCol, epochId, t, cfg)
+        case None =>
+          processBatch(spark, batch, root, idCol, vecCol, epochId, cfg)
       }
-      .start()
-  }
+    }
 }

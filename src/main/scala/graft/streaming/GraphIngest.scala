@@ -48,8 +48,8 @@ import graft.operators.Curation
   * stores share. This rides the ingest stream's doc-id uniqueness (the
   * corpus-store contract): a source that logically re-delivers a whole
   * document under its old id duplicates the corpus row AND its pairs —
-  * dedup such sources upstream, the same boundary
-  * [[StreamHeavyHitters]] states for counting state.
+  * dedup such sources upstream: a stream's counting state cannot tell a
+  * re-delivery from a new arrival.
   *
   * Scale shape: per batch, the degree count is one partial-agg'd
   * aggregate over the batch's own pairs; the merge-log derivation runs

@@ -441,33 +441,29 @@ object IngestJob {
         count(when(!col("srcKey").contains("request.json") && !failed, 1))
           .as("responses_processed"),
         count(when(failed, 1)).as("failed_records"))
-    envelopes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        // one materialization of the micro-batch: the steps below run
-        // several actions (key collect, quarantine write, store merge) and
-        // an uncached batch would re-read the source AND re-fire the
-        // observed counters once per action, over-reporting every metric
-        val b = batch.persist()
-        try {
-          val (hasDead, keys) = scanBatch(b)
-          // keyed by epoch + dynamic partition overwrite: a replayed epoch
-          // (crash after the DLQ write but before the checkpoint commit)
-          // rewrites ITS partition instead of appending duplicates — the
-          // quarantine gets the same exactly-once-per-epoch semantics as
-          // the store swap
-          if (hasDead)
-            toDeadLetters(b).withColumn("batch_id", lit(epochId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id")
-              .parquet(dlqDir)
-          mergeKeys(spark, toRecords(b), keys, storeDir)
-          Option(invalidate).foreach(_.invalidateAll())
-          Option(invalidateBlobs).foreach(_.invalidateAll())
-        } finally b.unpersist()
-      }
-      .start()
+    IngestStages.loop(envelopes, checkpointDir, trigger) { (batch, epochId) =>
+      // one materialization of the micro-batch: the steps below run
+      // several actions (key collect, quarantine write, store merge) and
+      // an uncached batch would re-read the source AND re-fire the
+      // observed counters once per action, over-reporting every metric
+      val b = batch.persist()
+      try {
+        val (hasDead, keys) = scanBatch(b)
+        // keyed by epoch + dynamic partition overwrite: a replayed epoch
+        // (crash after the DLQ write but before the checkpoint commit)
+        // rewrites ITS partition instead of appending duplicates — the
+        // quarantine gets the same exactly-once-per-epoch semantics as
+        // the store swap
+        if (hasDead)
+          toDeadLetters(b).withColumn("batch_id", lit(epochId))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(dlqDir)
+        mergeKeys(spark, toRecords(b), keys, storeDir)
+        Option(invalidate).foreach(_.invalidateAll())
+        Option(invalidateBlobs).foreach(_.invalidateAll())
+      } finally b.unpersist()
+    }
   }
 }

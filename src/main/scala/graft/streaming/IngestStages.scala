@@ -4,8 +4,11 @@ import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
-/** Per-batch stage plumbing shared by the ingest loops: named stages (a
+/** Per-batch stage plumbing shared by the ingest loops: the one loop
+  * skeleton every family's `run()` starts ([[loop]]), named stages (a
   * Spark job description per stage, so `graft.JobProfile`'s per-job wall
   * breakdown is self-describing), CONCURRENT submission of the
   * independent ones, and the one batch-keyed dynamic-overwrite writer
@@ -40,6 +43,55 @@ private[streaming] object IngestStages {
       t.setDaemon(true)
       t
     }))
+
+  /** The file-discovered parquet source of the document and embedding
+    * loops: new files under `inDir` are the batch stream, at most
+    * `maxFilesPerTrigger` of them per micro-batch ([[IngestJob.run]]'s
+    * discovery model, over parquet instead of JSON envelopes).
+    */
+  def source(spark: SparkSession, schema: StructType,
+             maxFilesPerTrigger: Int, inDir: String): DataFrame =
+    spark.readStream
+      .schema(schema)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .parquet(inDir)
+
+  /** THE ingest loop: start `body` over every micro-batch of `src`. Its
+    * `foreachBatch` contract (Structured Streaming, SIGMOD 2018) is one
+    * epoch id per committed micro-batch, and a replay of the uncommitted
+    * one under the same id on restart; the batch-keyed overwrites
+    * ([[overwriteParts]]) turn that into exactly-once stores.
+    *
+    * `compactEvery` is the in-loop tier-fold cadence: at each nth epoch,
+    * BEFORE the body (so the batch's own store reads open the folded
+    * runs), `fold` gets `upTo = epochId − 1` to tier-fold with
+    * `fromExclusive = −1` — ALL live real epochs, not a sliding window, so
+    * a cadence whose window held <2 partitions for some store (a
+    * vector-less batch, say) is caught by the next one instead of skipped
+    * forever. Safe inside `foreachBatch`: the loop is the single writer,
+    * and epochs ≤ epochId−1 are checkpoint-committed. A replayed trigger
+    * re-runs the fold over an emptied range — a no-op.
+    *
+    * A non-positive cadence fails HERE, at the `run()` call, before `src`
+    * (by-name) resolves its input and before any checkpoint state exists —
+    * not as a first-trigger StreamingQueryException.
+    */
+  def loop(src: => DataFrame, checkpointDir: String, trigger: Trigger,
+           compactEvery: Option[Int] = None, fold: Long => Unit = _ => ())
+          (body: (DataFrame, Long) => Unit): StreamingQuery = {
+    compactEvery.foreach(n =>
+      require(n > 0, s"compactEvery must be positive, got $n"))
+    src.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, epochId: Long) =>
+        compactEvery.foreach { n =>
+          if (epochId > 0 && epochId % n == 0) fold(epochId - 1L)
+        }
+        body(batch, epochId)
+      }
+      .start()
+  }
 
   /** Spark thread-local properties a stage must CARRY FROM ITS CALLER,
     * not inherit from whichever thread happened to create the pooled
@@ -157,16 +209,14 @@ private[streaming] object IngestStages {
     * layout — their row payloads can be text-heavy and their file counts
     * are already bounded by the batch's own partitioning.
     */
-  def overwriteParts(df: DataFrame, partCols: Seq[String], dir: String,
-                     classKeyed: Option[Boolean] = None): Unit = {
-    // The layout contract is stated at the call site via `classKeyed`
-    // (r18, ADVICE): today's multi-col writes are all batch_id+mod-class,
-    // so the arity heuristic stands as the default — but a future write
-    // partitioned by two non-class columns (e.g. batch_id+date over
-    // text-heavy rows) must pass Some(false) rather than silently get
-    // the full-row exchange this doc says batch-id-only writes avoid.
+  def overwriteParts(df: DataFrame, partCols: Seq[String], dir: String): Unit = {
+    // The arity rule: every multi-column write here is batch_id + a mod
+    // class, so more than one partition column means class-keyed. A write
+    // partitioned by two NON-class columns (e.g. batch_id+date over
+    // text-heavy rows) would silently get the full-row exchange this doc
+    // says batch-id-only writes avoid — it needs its own writer.
     val laid =
-      if (classKeyed.getOrElse(partCols.size > 1))
+      if (partCols.size > 1)
         df.repartition(partCols.map(org.apache.spark.sql.functions.col): _*)
       else df
     laid.write.mode("overwrite")

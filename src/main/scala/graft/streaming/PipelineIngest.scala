@@ -416,58 +416,35 @@ object PipelineIngest {
           maxFilesPerTrigger: Int = 100,
           trigger: Trigger = Trigger.AvailableNow(),
           invalidate: Option[graft.ResultCache] = None): StreamingQuery = {
-    // validated HERE, not per trigger: a bad cadence must fail the
-    // run() call, not surface as a first-trigger StreamingQueryException
-    // after checkpoint state exists
-    cfg.compactEvery.foreach(n =>
-      require(n > 0, s"compactEvery must be positive, got $n"))
     requireNotMidRebuild(spark, root)
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        // tier-fold cadence BEFORE the batch ([[StoreCompaction
-        // .cadence]]'s contract), so the batch's own store reads open
-        // the folded runs. The curated outDir folds on the same cadence
-        // — its semantic batch_id survives as the src_batch stamp
-        // ([[ProductStore]]), so the serving table's partition count
-        // stays bounded without erasing provenance.
-        StoreCompaction.cadence(epochId, cfg.compactEvery) { upTo =>
-          compactStores(spark, root, upTo, cfg, fromExclusive = -1L)
-          // a REFUSED product fold (pre-stamp or mixed-schema epochs in
-          // range — compactProduct's loud guards) must not kill the
-          // ingest stream over a maintenance optimization: warn and keep
-          // ingesting; the stores' own folds above already ran
-          outDir.foreach { d =>
-            try ProductStore.compactProduct(spark, d, upTo, fromExclusive = -1L)
-            catch { case e: IllegalArgumentException =>
-              System.err.println(s"[pipeline] product fold skipped: ${e.getMessage}")
-            }
+    // the curated outDir folds on the stores' cadence — its semantic
+    // batch_id survives as the src_batch stamp ([[ProductStore]]), so the
+    // serving table's partition count stays bounded without erasing
+    // provenance
+    def fold(upTo: Long): Unit = {
+      compactStores(spark, root, upTo, cfg, fromExclusive = -1L)
+      outDir.foreach(ProductStore.compactOrSkip(spark, _, upTo))
+    }
+    IngestStages.loop(IngestStages.source(spark, schema, maxFilesPerTrigger, inDir),
+        checkpointDir, trigger, cfg.compactEvery, fold) { (batch, epochId) =>
+      val view = processBatch(spark, batch, root, textCol, idCol, vecCol,
+        targetPred, labelCol, epochId, cfg)
+      outDir.foreach(d => ProductStore.writeEpoch(spark, view, d, epochId,
+        invalidate))
+      // cache warmer (cfg.warmServe): the flagship unfiltered top-100
+      // goes cache-hot right after the commit — one bounded walk (the
+      // unselective case reads only the just-written newest partition).
+      // Same rule as the product fold: a failed OPTIMIZATION must not
+      // kill the ingest stream — log and keep ingesting; the next ask
+      // just pays its own walk.
+      if (cfg.warmServe)
+        for (d <- outDir; c <- invalidate)
+          try searchCurated(spark, d, Map.empty, idCol, limit = 100,
+            cache = Some(c))
+          catch { case e: Throwable =>
+            org.slf4j.LoggerFactory.getLogger(getClass).warn(
+              s"cache warm of $d skipped: ${e.getMessage}")
           }
-        }
-        val view = processBatch(spark, batch, root, textCol, idCol, vecCol,
-          targetPred, labelCol, epochId, cfg)
-        outDir.foreach(d => ProductStore.writeEpoch(spark, view, d, epochId,
-          invalidate))
-        // cache warmer (cfg.warmServe): the flagship unfiltered top-100
-        // goes cache-hot right after the commit — one bounded walk (the
-        // unselective case reads only the just-written newest
-        // partition). Same rule as the product fold above: a failed
-        // OPTIMIZATION must not kill the ingest stream — warn and keep
-        // ingesting; the next ask just pays its own walk.
-        if (cfg.warmServe)
-          for (d <- outDir; c <- invalidate)
-            try searchCurated(spark, d, Map.empty, idCol, limit = 100,
-              cache = Some(c))
-            catch { case e: Throwable =>
-              System.err.println(s"[pipeline] cache warm skipped: ${e.getMessage}")
-            }
-        ()
-      }
-      .start()
+    }
   }
 }

@@ -313,6 +313,19 @@ object ProductStore {
       fromExclusive = fromExclusive, srcOverride = Some(src))
   }
 
+  /** The ingest loops' in-loop product fold: [[compactProduct]] over all
+    * live epochs up to `upToBatch`. A REFUSED fold (pre-stamp or
+    * mixed-schema epochs in range — compactProduct's loud guards) must
+    * not kill the ingest stream over a maintenance optimization: it is
+    * logged and skipped, and the loop keeps ingesting.
+    */
+  def compactOrSkip(spark: SparkSession, outDir: String, upToBatch: Long): Unit =
+    try compactProduct(spark, outDir, upToBatch, fromExclusive = -1L)
+    catch { case e: IllegalArgumentException =>
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"product fold of $outDir skipped: ${e.getMessage}")
+    }
+
   /** The max epoch a segment covers — the newest-first walk order: live
     * epochs by id, a tier `-(upTo+2)` by its `upTo`, the `-1` base last
     * (it holds the oldest folded prefix).

@@ -97,22 +97,6 @@ object StoreCompaction {
     */
   def tierBatchId(upToBatch: Long): Long = -(upToBatch + 2L)
 
-  /** The in-loop tier-fold cadence shared by every `run()` loop: at each
-    * nth trigger, hand the caller `upToBatch = epochId − 1` to tier-fold
-    * with `fromExclusive = −1` — ALL live real epochs, not a sliding
-    * window, so a cadence whose window held <2 partitions for some store
-    * (a vector-less batch, say) is caught by the next one instead of
-    * skipped forever. Safe inside `foreachBatch`: the loop is the single
-    * writer, and epochs ≤ epochId−1 are checkpoint-committed. A replayed
-    * trigger re-runs the fold over an emptied range — a no-op. Callers
-    * validate n > 0 at `run()` entry (not per trigger).
-    */
-  def cadence(epochId: Long, compactEvery: Option[Int])
-             (foldUpTo: Long => Unit): Unit =
-    compactEvery.foreach { n =>
-      if (epochId > 0 && epochId % n == 0) foldUpTo(epochId - 1L)
-    }
-
   private def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 

@@ -324,9 +324,9 @@ object TextModelIngest {
   }
 
   /** Start the streaming ingest over a directory of document parquet
-    * files ([[DocIndexIngest.run]]'s discovery model): `foreachBatch`
-    * runs [[processBatch]]; checkpointing + batch-keyed overwrites give
-    * exactly-once counts.
+    * files ([[DocIndexIngest.run]]'s discovery model):
+    * [[IngestStages.loop]] runs [[processBatch]]; checkpointing +
+    * batch-keyed overwrites give exactly-once counts.
     */
   def run(
       spark: SparkSession, inDir: String, root: String,
@@ -337,23 +337,11 @@ object TextModelIngest {
       cfg: Config = Config(),
       maxFilesPerTrigger: Int = 100,
       trigger: Trigger = Trigger.AvailableNow(),
-      compactEvery: Option[Int] = None): StreamingQuery = {
-    compactEvery.foreach(n =>
-      require(n > 0, s"compactEvery must be positive, got $n"))
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        StoreCompaction.cadence(epochId, compactEvery)(upTo =>
-          compactStores(spark, root, upTo, fromExclusive = -1L))
-        processBatch(spark, batch, root, textCol, idCol, targetPred,
-          labelCol, epochId, cfg)
-        ()
-      }
-      .start()
-  }
+      compactEvery: Option[Int] = None): StreamingQuery =
+    IngestStages.loop(IngestStages.source(spark, schema, maxFilesPerTrigger, inDir),
+        checkpointDir, trigger, compactEvery,
+        upTo => compactStores(spark, root, upTo, fromExclusive = -1L)) { (batch, epochId) =>
+      processBatch(spark, batch, root, textCol, idCol, targetPred,
+        labelCol, epochId, cfg)
+    }
 }

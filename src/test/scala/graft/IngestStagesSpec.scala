@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * id); (2) a
   * stage must restore the previous job description (a null-out wipes the
   * enclosing stage's / streaming engine's label for the rest of the
-  * thread); (3) a multi-failure trigger must surface every cause.
+  * thread); (3) a multi-failure trigger must surface every cause;
+  * (4) a bad fold cadence fails the loop's `run()` call, before any
+  * checkpoint state exists.
   */
 class IngestStagesSpec extends AnyFunSuite {
   private lazy val spark = graft.TestSpark.spark
@@ -91,5 +93,41 @@ class IngestStagesSpec extends AnyFunSuite {
     val all = e.getMessage +: e.getSuppressed.toSeq.map(_.getMessage)
     assert(all.toSet === Set("boom1", "boom2"),
       s"expected both failures reported, got $all")
+  }
+
+  test("compactEvery = Some(0) fails each family's run() call: no checkpoint dir, no query") {
+    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.streaming.StreamingQuery
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("text", StringType), StructField("lang", StringType),
+      StructField("embedding", ArrayType(FloatType))))
+    val bad = Some(0)
+    val loops: Seq[(String, (String, String, String) => StreamingQuery)] = Seq(
+      "DocIndexIngest" -> ((in, root, cp) => DocIndexIngest.run(spark, in, root,
+        schema, "text", "doc_id", cp, compactEvery = bad)),
+      "EmbIndexIngest" -> ((in, root, cp) => EmbIndexIngest.run(spark, in, root,
+        schema, "doc_id", "embedding", cp, compactEvery = bad)),
+      "TextModelIngest" -> ((in, root, cp) => TextModelIngest.run(spark, in, root,
+        schema, "text", "doc_id", lit(true), "lang", cp, compactEvery = bad)),
+      "CurateIngest" -> ((in, root, cp) => CurateIngest.run(spark, in, root,
+        schema, "text", "doc_id", cp, compactEvery = bad)),
+      "PipelineIngest" -> ((in, root, cp) => PipelineIngest.run(spark, in, root,
+        schema, "text", "doc_id", Some("embedding"), lit(true), "lang", cp,
+        PipelineIngest.Config(compactEvery = bad))))
+    loops.foreach { case (name, start) =>
+      val base = java.nio.file.Files.createTempDirectory("graft-badcad").toFile
+      val in = new java.io.File(base, "in")
+      assert(in.mkdir())
+      val cp = new java.io.File(base, "cp")
+      val active = spark.streams.active.map(_.id).toSet
+      val e = intercept[IllegalArgumentException] {
+        start(in.getPath, s"$base/root", cp.getPath)
+      }
+      assert(e.getMessage.contains("compactEvery must be positive"), s"$name: $e")
+      assert(!cp.exists(), s"$name created checkpoint state before failing")
+      assert(spark.streams.active.map(_.id).toSet === active,
+        s"$name started a query before failing")
+    }
   }
 }

@@ -198,6 +198,20 @@ class SamplingSpec extends SparkTestBase {
     assert(again.toSeq === out.toSeq)
   }
 
+  test("importanceSample: weights past the 2^43 priority bound raise; the bound samples") {
+    val over = Seq((1L, (Long.MaxValue >> 20) + 1L)).toDF("id", "w")
+    val thrown = intercept[Throwable] {
+      Sampling.importanceSample(over, "w", "id", 1).collect()
+    }
+    assert(org.apache.commons.lang3.exception.ExceptionUtils
+      .getRootCauseMessage(thrown).contains("priority bound"),
+      s"expected a priority-bound raise, got $thrown")
+    // and the bound itself still samples (no false raise)
+    val ok = Sampling.importanceSample(
+      Seq((1L, Long.MaxValue >> 20)).toDF("id", "w"), "w", "id", 1).collect()
+    assert(ok.length === 1 && ok(0).getAs[Long]("priority") > 0L)
+  }
+
   test("assignSplit: exhaustive labeled partition; stable under corpus growth; remainder to last") {
     import org.apache.spark.sql.functions.col
     val df = (0L until 200L).toDF("doc_id")

@@ -1,14 +1,10 @@
 package graft
 
-import java.sql.Timestamp
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
 import graft.operators.Aggregates
 import graft.sources.{Sinks, Tables}
-import graft.streaming.StreamWindows
 
 /** Contracts for the scale-critical building blocks: mergeable sketches,
-  * bucketed (exchange-free) join layout, and bounded-state streaming dedup.
+  * bucketed (exchange-free) join layout, and on-disk training shards.
   */
 class ScaleOpsSpec extends SparkTestBase {
   import spark.implicits._
@@ -109,28 +105,6 @@ class ScaleOpsSpec extends SparkTestBase {
     }
   }
 
-  test("streaming dedup suppresses redelivered keys within the watermark horizon") {
-    implicit val sqlCtx = spark.sqlContext
-    def ts(s: String): Timestamp = Timestamp.valueOf(s)
-    val input = MemoryStream[(String, Timestamp)]
-    val deduped = StreamWindows.dedupWithinWatermark(
-      input.toDF().toDF("txn", "ts"), "ts", Seq("txn"), watermark = "10 minutes")
-    val q = deduped.writeStream.format("memory").queryName("dedup_stream")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(("t-1", ts("2025-01-26 10:00:00")), ("t-2", ts("2025-01-26 10:00:10")))
-      q.processAllAvailable()
-      // same key redelivered in a later batch, inside the horizon → dropped
-      input.addData(("t-1", ts("2025-01-26 10:01:00")))
-      q.processAllAvailable()
-      input.addData(("t-3", ts("2025-01-26 10:02:00")))
-      q.processAllAvailable()
-      val seen = spark.table("dedup_stream").select("txn").as[String].collect().toSeq
-      assert(seen.sorted === Seq("t-1", "t-2", "t-3"),
-        s"each key must be emitted exactly once within the horizon: $seen")
-    } finally q.stop()
-  }
-
   test("training shards on disk: one partition per shard, rows stored in pos order") {
     val docs = Tables.Fixture(spark, sfDir).documents.select("doc_id", "text")
     val out = java.nio.file.Files.createTempDirectory("shards").toString
@@ -146,29 +120,5 @@ class ScaleOpsSpec extends SparkTestBase {
       assert(rows.map(_._2).toSeq === rows.map(_._2).sorted.toSeq,
         s"shard $k rows must be STORED in pos order, not just carry a pos column")
     }
-  }
-
-  test("streaming content dedup: normalized-text variants collapse, first arrival wins") {
-    implicit val sqlCtx = spark.sqlContext
-    def ts(s: String): Timestamp = Timestamp.valueOf(s)
-    val input = MemoryStream[(Long, String, Timestamp)]
-    val deduped = StreamWindows.dedupContentWithinWatermark(
-      input.toDF().toDF("doc_id", "text", "ts"), "ts", "text", watermark = "10 minutes")
-    val q = deduped.writeStream.format("memory").queryName("content_dedup_stream")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData((1L, "The quick brown fox!", ts("2025-01-26 10:00:00")))
-      q.processAllAvailable()
-      // case/punctuation/whitespace variant of doc 1, later batch → dropped
-      input.addData((2L, "the  quick   brown fox", ts("2025-01-26 10:01:00")),
-        (3L, "a genuinely different document", ts("2025-01-26 10:01:30")))
-      q.processAllAvailable()
-      val seen = spark.table("content_dedup_stream")
-        .select("doc_id").as[Long].collect().toSeq.sorted
-      assert(seen === Seq(1L, 3L),
-        s"normalization dup must be suppressed, first arrival kept: $seen")
-      // the fingerprint working column must not leak into the output
-      assert(!spark.table("content_dedup_stream").columns.contains("__fp"))
-    } finally q.stop()
   }
 }

@@ -239,8 +239,8 @@ class StoreCompactionSpec extends SparkTestBase {
   test("family-loop compactEvery cadence: tiered layout, store content identical to an uncadenced ingest") {
     // the standalone DocIndexIngest.run loop carries the same in-loop
     // maintenance knob as the unified loop (all five run() loops share
-    // StoreCompaction.cadence); pin one family end-to-end through the
-    // real stream
+    // IngestStages.loop's fold cadence); pin one family end-to-end
+    // through the real stream
     val root = tmp("graft-cadroot")
     val inDir = tmp("graft-cadin")
     val cp = tmp("graft-cadcp")
