@@ -193,11 +193,17 @@ final case class AuditEngine(spark: SparkSession, storeDir: String) {
     * under a filter-derived key before querying (`audit.services.ts:94-103`)
     * and writes the result back with a 300 s expiry (`:169`, `:12`).
     * DEVIATION: our key is sorted+escaped (the reference's unsorted
-    * `JSON.stringify` key misses on reordered filters, `:94`), and ingest
-    * can invalidate ([[graft.streaming.IngestJob.run]]'s `invalidate`
-    * hook) — the reference relies on TTL expiry alone.
+    * `JSON.stringify` key misses on reordered filters, `:94`), and the
+    * answer does not go stale: [[graft.streaming.IngestJob.run]]'s
+    * `invalidate` hook applies each commit's merged rows to it, or drops
+    * it when they cannot settle it exactly — the reference serves a
+    * cached answer unchanged until its TTL runs out. A hit is the
+    * answer's driver rows and runs no Spark job.
     */
   def searchCached(cache: ResultCache, filters: Map[String, Any],
                    limit: Int = 100): DataFrame =
-    cache.getOrCompute(cache.keyOf(filters, limit))(search(filters, limit))
+    cache.getOrComputeAnswer(cache.keyOf(filters, limit),
+      ResultCache.AuditAnswer(storeId, filters, limit))(search(filters, limit))
+
+  private lazy val storeId = IngestJob.storeId(spark, storeDir)
 }

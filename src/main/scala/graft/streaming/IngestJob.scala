@@ -1,7 +1,8 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -56,9 +57,9 @@ import org.apache.spark.sql.types._
   * Jobs per trigger: per-job scheduling, not data, is a small trigger's
   * cost, so [[run]]'s trigger submits only these: ONE collect of the
   * batch's dead flags and keys, the dead-letter write (only when the batch
-  * holds a dead letter), the locate, the merge, and the rewrite (an
-  * exchange and the write) — 8 jobs on the benchmark's 100-envelope
-  * drain. Listing the trigger's files runs on the driver
+  * holds a dead letter), ONE collect of the merged keys (the locate scan
+  * and the merge's exchange), and the rewrite (an exchange and the
+  * write). Listing the trigger's files runs on the driver
   * ([[graft.Graft.session]]).
   */
 object IngestJob {
@@ -172,20 +173,24 @@ object IngestJob {
     * `processQueue.ts:162-198` insert, `:199-244` update, drop-on-miss).
     */
   def merge(store: DataFrame, records: DataFrame): DataFrame =
-    store.unionByName(records)
-      .groupBy(col("transaction_id"))
-      .agg(
-        max("app_id").as("app_id"),
-        max("endpoint").as("endpoint"),
-        max("workflow_id").as("workflow_id"),
-        max("action").as("action"),
-        max("status_code").as("status_code"),
-        max("timestamp").as("timestamp"),
-        max("request_s3_key").as("request_s3_key"),
-        max("response_s3_key").as("response_s3_key"))
+    mergeRows(store.unionByName(records))
+
+  /** [[merge]]'s aggregation over an already-unioned frame: one row per
+    * key in [[storeSchema]] order, then the `carry` aggregates.
+    */
+  private def mergeRows(rows: DataFrame, carry: org.apache.spark.sql.Column*): DataFrame = {
+    val fields = storeSchema.fieldNames.toSeq.tail.map(f => max(f).as(f)) ++ carry
+    rows.groupBy(col("transaction_id")).agg(fields.head, fields.tail: _*)
+  }
 
   private def fileSystem(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The store's fully-qualified URI, so `/data/audit` and `/data/audit/`
+    * name the same store in [[graft.ResultCache.applyCommit]].
+    */
+  private[graft] def storeId(spark: SparkSession, storeDir: String): String =
+    fileSystem(spark, storeDir).makeQualified(new Path(storeDir)).toUri.toString
 
   /** `dt=...` child directory names of `dir`, empty if `dir` is missing. */
   private def listParts(fs: FileSystem, dir: String): Set[String] = {
@@ -320,39 +325,40 @@ object IngestJob {
   }
 
   /** [[processBatch]]'s locate, merge and rewrite, given the batch's
-    * records and their distinct keys.
+    * records and their distinct keys. Returns the merged rows — the
+    * post-commit row of every key, at most one per key, in
+    * [[storeSchema]] order followed by `old_dt` and `dt` — empty when
+    * there is no key.
     */
   private def mergeKeys(
       spark: SparkSession, records: DataFrame, keys: Seq[String],
-      storeDir: String): Unit = {
-    if (keys.isEmpty) return
+      storeDir: String): Seq[Row] = {
+    if (keys.isEmpty) return Nil
     val store = readStoreWithDt(spark, storeDir)
-    // hit and merged are tiny (bounded by the batch's key count) — persist
-    // so the locate scan runs once, not once per action below
-    val hit = store.filter(col("transaction_id").isInCollection(keys)).persist()
-    val merged = merge(hit.drop("dt"), records)
+    val hit = store.filter(col("transaction_id").isInCollection(keys))
+    // the batch records carry a null dt, so the null-skipping max is each
+    // key's stored dt, null for a key the store does not hold yet
+    val merged = mergeRows(hit.unionByName(records, allowMissingColumns = true),
+        max("dt").as("old_dt"))
       .withColumn("dt",
         coalesce(date_format(col("timestamp"), "yyyy-MM-dd"), lit(PendingDt)))
-      .persist()
-    try {
-      // at most one row per key each: collected whole and deduplicated on
-      // the driver, since a distinct() would cost a shuffle job apiece
-      val parts: Seq[String] =
-        (hit.select("dt").collect() ++ merged.select("dt").collect())
-          .map(_.getString(0)).distinct.toIndexedSeq
-      val survivors = store
-        .filter(col("dt").isInCollection(parts) &&
-          !col("transaction_id").isInCollection(keys))
-      survivors.unionByName(merged)
-        .repartition(col("dt"))
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", MaxRecordsPerFile.toString)
-        .partitionBy("dt").parquet(storeDir + ".tmp")
-      swapPartitions(fileSystem(spark, storeDir), storeDir, parts)
-    } finally {
-      hit.unpersist()
-      merged.unpersist()
-    }
+    // ONE collect (≤ one row per key): the touched dts, old and new, come
+    // from the driver rows, and the rewrite takes them as a local relation
+    // instead of locating the keys a second time
+    val rows = merged.collect().toSeq
+    val parts: Seq[String] = rows.flatMap(r =>
+      Option(r.getAs[String]("old_dt")).toSeq :+ r.getAs[String]("dt")).distinct
+    val survivors = store
+      .filter(col("dt").isInCollection(parts) &&
+        !col("transaction_id").isInCollection(keys))
+    val fresh = spark.createDataFrame(rows.asJava, merged.schema).drop("old_dt")
+    survivors.unionByName(fresh)
+      .repartition(col("dt"))
+      .write.mode("overwrite")
+      .option("maxRecordsPerFile", MaxRecordsPerFile.toString)
+      .partitionBy("dt").parquet(storeDir + ".tmp")
+    swapPartitions(fileSystem(spark, storeDir), storeDir, parts)
+    rows
   }
 
   /** Compact the store's partitions into ≤`maxRecordsPerFile`-row files
@@ -397,21 +403,26 @@ object IngestJob {
     * `processQueue.ts:76-79`) made real — and still counted in
     * `failed_records`.
     *
-    * `invalidate`: an optional [[graft.ResultCache]] cleared after each
-    * committed batch, so cached search results never outlive the data they
-    * were computed from (a deliberate improvement — the reference's Redis
-    * entries only age out via TTL, `audit.services.ts:83`).
-    * `invalidateBlobs`: same hook for the per-blob [[graft.BlobCache]] —
-    * blob keys are write-once by contract, but a late response batch CAN
-    * land a payload for a key a prior search already resolved (as absent),
-    * and wiring the write path here means a post-ingest search never
-    * serves a pre-ingest blob view even inside the TTL window.
+    * `invalidate`: an optional [[graft.ResultCache]] brought up to date
+    * after each committed batch, so cached search results never outlive
+    * the data they were computed from (a deliberate improvement — the
+    * reference's Redis entries only age out via TTL,
+    * `audit.services.ts:83`). The trigger hands it the batch's merged
+    * rows: each [[graft.AuditEngine.searchCached]] answer over this store
+    * is updated from them when that is exact, and every other entry is
+    * dropped ([[graft.ResultCache.applyCommit]]).
+    * `invalidateBlobs`: the per-blob [[graft.BlobCache]], cleared after
+    * each committed batch — blob keys are write-once by contract, but a
+    * late response batch CAN land a payload for a key a prior search
+    * already resolved (as absent), and wiring the write path here means a
+    * post-ingest search never serves a pre-ingest blob view even inside
+    * the TTL window.
     *
     * Each trigger persists the batch and runs, in order: one collect of
     * (dead flag, `transactionId`), which yields both whether to write the
     * dead-letter store and the distinct keys; the dead-letter write; the
-    * locate and merge collects of [[processBatch]]'s merge step; and its
-    * rewrite.
+    * one collect of [[processBatch]]'s merge step, which locates and
+    * merges the keys; and its rewrite.
     */
   def run(
       spark: SparkSession,
@@ -460,8 +471,8 @@ object IngestJob {
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
             .parquet(dlqDir)
-        mergeKeys(spark, toRecords(b), keys, storeDir)
-        Option(invalidate).foreach(_.invalidateAll())
+        val merged = mergeKeys(spark, toRecords(b), keys, storeDir)
+        Option(invalidate).foreach(_.applyCommit(storeId(spark, storeDir), merged))
         Option(invalidateBlobs).foreach(_.invalidateAll())
       } finally b.unpersist()
     }

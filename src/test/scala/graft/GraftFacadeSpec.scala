@@ -180,10 +180,13 @@ class GraftFacadeSpec extends SparkTestBase {
     assert(first.count() === 1)
     assert(cache.contains(cache.keyOf(Map("app_id" -> "app-a"), 100)))
     // same filters, different map order → same key → SAME cached frame
-    val second = engine.searchCached(cache, Map("app_id" -> "app-a"))
+    var second: org.apache.spark.sql.DataFrame = null
+    val hitJobs = jobsDuring {
+      second = engine.searchCached(cache, Map("app_id" -> "app-a"))
+      second.collect()
+    }
     assert(second eq first, "fresh key must serve the cached DataFrame")
-    assert(second.queryExecution.withCachedData.toString.contains("InMemoryRelation"),
-      "cached result must be served from persisted blocks")
+    assert(hitJobs.isEmpty, s"a hit is served from driver rows and runs no Spark job: $hitJobs")
 
     clock = 2000L // TTL passed → recompute, new entry
     val third = engine.searchCached(cache, Map("app_id" -> "app-a"))
@@ -279,10 +282,18 @@ class GraftFacadeSpec extends SparkTestBase {
     assert(engine.searchCached(cache, Map("app_id" -> "app-a")).count() === 1)
 
     // second batch lands WITH the cache wired in — the post-commit hook
-    // must clear it, so the next cached search sees the new row
+    // must bring the entry up to date, so the next cached search sees the
+    // new row
     Files.writeString(in.resolve("t2-request.json"), envelope("t2"))
     IngestJob.run(spark, in.toString, store, cp, invalidate = cache).awaitTermination()
-    assert(cache.size === 0, "committed batch must invalidate the cache")
+    assert(cache.contains(cache.keyOf(Map("app_id" -> "app-a"), 100)),
+      "the commit must bring the cached answer up to date, not drop it")
+    var served = Seq.empty[org.apache.spark.sql.Row]
+    val jobs = jobsDuring {
+      served = engine.searchCached(cache, Map("app_id" -> "app-a")).collect().toSeq
+    }
+    assert(jobs.isEmpty, s"serving the maintained answer must run no Spark job: $jobs")
+    assert(served === engine.search(Map("app_id" -> "app-a")).collect().toSeq)
     assert(engine.searchCached(cache, Map("app_id" -> "app-a")).count() === 2,
       "post-ingest cached search must serve fresh rows")
   }
